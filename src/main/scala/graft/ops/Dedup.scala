@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.XxHash64
@@ -21,20 +21,6 @@ object Dedup {
 
   private def docs(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/documents.parquet")
-
-  /** Drop hot buckets from a banding table before its self-join:
-    * buckets on `keyCols` holding more than `maxDf` rows are removed
-    * (from the JOIN only). ONE implementation for all four banding
-    * families (ngram shingles express the same idea over their own
-    * shape) so the cap semantics the oracles interpolate can't drift
-    * per call site. */
-  private[ops] def capHotBuckets(buckets: DataFrame, keyCols: Seq[String],
-                                 maxDf: Int): DataFrame = {
-    val dfOk = buckets.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("df")).filter(col("df") <= maxDf)
-      .select(keyCols.map(col): _*)
-    buckets.join(dfOk, keyCols)
-  }
 
   /** Exact dedup by normalized-text fingerprint. */
   def exactDedup(spark: SparkSession, dir: String): DataFrame = {
@@ -78,18 +64,6 @@ object Dedup {
                                    n: Int = 3): DataFrame =
     shinglesRaw(corpus, n).repartition(keys.map(col): _*).distinct()
 
-  /** Exact n-gram Jaccard pairs within a `source` block: intersection
-    * via shingle equi-join + pair count; union by inclusion-exclusion.
-    * Integer outputs so the DuckDB oracle compares exactly.
-    *
-    * `maxDf` guards the self-join against hot stop-shingles: a shingle
-    * occurring in f docs contributes f² join pairs, so one "of the
-    * and"-class shingle is quadratic at 100 TB. Shingles with
-    * df > maxDf are dropped from the JOIN ONLY (doc shingle-set sizes
-    * keep them), and the SAME cap is in the oracle SQL, so engine and
-    * oracle agree bit-for-bit even when the cap binds. */
-  val MaxShingleDf = 1000
-
   /** The df-capped shingle-equi-join pair core shared by
     * [[ngramJaccard]] (which decorates it with set sizes) and
     * [[dedupClusters]] (which needs only the pair ids): (a_id, b_id,
@@ -118,8 +92,13 @@ object Dedup {
       .filter($"inter" >= minInter)
   }
 
+  /** Exact n-gram Jaccard pairs within a `source` block: intersection
+    * via shingle equi-join + pair count; union by inclusion-exclusion.
+    * Integer outputs so the DuckDB oracle compares exactly. Hot
+    * stop-shingles are capped out of the JOIN ONLY
+    * ([[Banding.MaxBucketDf]]); doc shingle-set sizes keep them. */
   def ngramJaccard(spark: SparkSession, dir: String, minInter: Int = 3,
-                   maxDf: Int = MaxShingleDf): DataFrame = {
+                   maxDf: Int = Banding.MaxBucketDf): DataFrame = {
     import spark.implicits._
     // keyed on the join/cap key, NOT persisted: the df cap, both
     // self-join sides and the sizes agg all reuse the one exchange
@@ -132,13 +111,6 @@ object Dedup {
       .select($"a_id", $"b_id", $"inter",
         ($"a_sh" + $"b_sh" - $"inter").as("uni"))
   }
-
-  /** Hot-bucket guard for the decontamination fp self-join, same
-    * pattern as [[MaxShingleDf]]: a fingerprint duplicated f times
-    * across the corpus is f² join pairs, and a pre-dedup mega-duplicate
-    * cluster (which belongs to exact dedup, upstream) would otherwise
-    * go quadratic here. The SAME cap is in the oracle SQL. */
-  val MaxFpDf = 1000
 
   /** The corpus the driver's decontamination queries run over:
     * `documents` plus a derived 'zbench' benchmark source (every 7th
@@ -162,12 +134,12 @@ object Dedup {
     * output is bounded by sources² regardless of input size, and the
     * fingerprint equi-join is the exact-dedup shuffle shape;
     * fingerprints duplicated more than `maxDf` times are dropped from
-    * the join ([[capHotBuckets]] — mirrored in the oracle), so a
+    * the join ([[Banding.capHotBuckets]] — mirrored in the oracle), so a
     * pre-dedup mega-duplicate is bounded instead of quadratic. */
   def decontaminate(spark: SparkSession, dir: String): DataFrame =
     decontaminateCorpus(benchCorpus(spark, dir))
 
-  def decontaminateCorpus(corpus: DataFrame, maxDf: Int = MaxFpDf): DataFrame = {
+  def decontaminateCorpus(corpus: DataFrame, maxDf: Int = Banding.MaxBucketDf): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
     // NOT the interPairs keyed+merge rework (tried in r6, reverted):
@@ -176,7 +148,7 @@ object Dedup {
     // sorts, and unlike the shingle joins there is no scale cliff here
     // (a corpus-sized fp side exceeds the broadcast threshold, so the
     // planner falls back to exchanges on its own).
-    val fp = capHotBuckets(
+    val fp = Banding.capHotBuckets(
       corpus.select($"doc_id", $"source", md5(lower(trim($"text"))).as("fp")),
       Seq("fp"), maxDf)
     fp.as("a").join(fp.as("b"),
@@ -191,18 +163,18 @@ object Dedup {
     * corpus still shares most of its word 3-grams. Per cross-source doc
     * pair, the count of shared distinct shingles, kept at >= minShared.
     * Same scale shape as [[ngramJaccard]]: the shingle equi-join
-    * carries the one shuffle and [[MaxShingleDf]] caps hot
+    * carries the one shuffle and [[Banding.MaxBucketDf]] caps hot
     * stop-shingles (mirrored in the oracle). Runs on the NATURAL corpus
     * — cross-source phrase reuse in the fixtures makes it non-vacuous
     * without planting. */
   def decontaminateNgram(spark: SparkSession, dir: String,
                          minShared: Int = 3,
-                         maxDf: Int = MaxShingleDf): DataFrame =
+                         maxDf: Int = Banding.MaxBucketDf): DataFrame =
     decontaminateNgramCorpus(
       docs(spark, dir).select("doc_id", "source", "text"), minShared, maxDf)
 
   def decontaminateNgramCorpus(corpus: DataFrame, minShared: Int = 3,
-                               maxDf: Int = MaxShingleDf): DataFrame = {
+                               maxDf: Int = Banding.MaxBucketDf): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
     // cross-source df cap: keyed on shingle alone (the join key) —
@@ -252,7 +224,7 @@ object Dedup {
     val sh = shinglesKeyedBy(docs(spark, dir), Seq("source", "shingle"))
     clusterLabels(
       docs(spark, dir).select($"doc_id"),
-      interPairs(sh, minInter = 3, maxDf = MaxShingleDf).select($"a_id", $"b_id"))
+      interPairs(sh, minInter = 3, maxDf = Banding.MaxBucketDf).select($"a_id", $"b_id"))
   }
 
   /** Edge-count threshold below which components are resolved by a
@@ -389,8 +361,6 @@ object Dedup {
       labels.unpersist()
       labels = upd.drop("improved")
       rounds += 1
-      if (sys.env.contains("GRAFT_WAVE_TIMING"))
-        println(s"[clusterLabels] round $rounds changed=$changed")
     }
     lastDistributedRounds.set(rounds)
     labels
@@ -419,10 +389,6 @@ object Dedup {
     sh.groupBy($"doc_id").agg(mins.head, mins.tail: _*)
   }
 
-  /** LSH banding: explode each signature into (band, band_hash) keys,
-    * self-join on the bucket, verify candidates with exact Jaccard on
-    * the shingle sets, keep pairs over the threshold (as intersection /
-    * union integer counts). */
   /** (doc_id, band, bh) LSH bucket keys — shared by [[minhashNearDup]]
     * and the aux oracle dump, so DuckDB replays exactly this banding. */
   def minhashBands(spark: SparkSession, dir: String): DataFrame = {
@@ -436,22 +402,15 @@ object Dedup {
       .select($"doc_id", $"bb.band", $"bb.bh")
   }
 
-  /** Hot-bucket guard for the LSH band join, same pattern as
-    * [[MaxShingleDf]]/[[MaxChunkDf]]: a band bucket of f docs is f²
-    * candidate pairs, and a mega-cluster of byte-identical docs (which
-    * belongs to EXACT dedup, upstream) would otherwise go quadratic
-    * here. The SAME cap is in the aux-band oracle SQL. */
-  val MaxBandDf = 1000
-
+  /** LSH banding: explode each signature into (band, band_hash) keys,
+    * self-join on the bucket (capped, [[Banding.CapThenDistinct]]),
+    * verify candidates with exact Jaccard on the shingle sets, keep
+    * pairs over the threshold (as intersection / union integer counts). */
   def minhashNearDup(spark: SparkSession, dir: String, minJaccardPct: Int = 50,
-                     maxDf: Int = MaxBandDf): DataFrame = {
+                     maxDf: Int = Banding.MaxBucketDf): DataFrame = {
     import spark.implicits._
-    val buckets = capHotBuckets(minhashBands(spark, dir), Seq("band", "bh"), maxDf)
-    val cands = buckets.as("a").join(buckets.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
+    val cands = Banding.selfJoin(minhashBands(spark, dir), "doc_id", Seq("band", "bh"),
+      Banding.CapThenDistinct(maxDf))
     // exact verification touches ONLY candidate pairs: per-doc shingle
     // sets are small (bounded by doc length), so array_intersect on the
     // joined pair beats re-running the full pairwise shingle join
@@ -513,49 +472,22 @@ object Dedup {
       .toDF("doc_id", "simhash")
   }
 
-  /** Hot-bucket guard for the chunk banding (same pattern and rationale
-    * as [[MaxShingleDf]]): one degenerate common 16-bit chunk (e.g.
-    * near-empty docs hashing alike) is f² join pairs with no cap. The
-    * SAME cap is interpolated into the oracle SQL. */
-  val MaxChunkDf = 1000
-
   /** SimHash near-dup: band the 64-bit signature into 4×16-bit chunks;
     * any pair agreeing on a chunk is a candidate (guaranteed to catch
     * every pair with hamming distance <= 3); verify by popcount.
     * Buckets with df > maxDf are dropped from the join. */
   def simhashNearDup(spark: SparkSession, dir: String, maxHamming: Int = 3,
-                     maxDf: Int = MaxChunkDf): DataFrame =
+                     maxDf: Int = Banding.MaxBucketDf): DataFrame =
     simhashNearDupFromSigs(simhashDf(spark, dir), maxHamming, maxDf)
 
   /** The banding + verify stage over a (doc_id, simhash) signature
     * table — split out so tests can plant adversarial signatures (hot
     * buckets) directly. */
   def simhashNearDupFromSigs(sig: DataFrame, maxHamming: Int = 3,
-                             maxDf: Int = MaxChunkDf): DataFrame = {
-    val spark = sig.sparkSession
-    import spark.implicits._
-    val chunkCols = (0 until 4).map(c =>
-      struct(lit(c).as("c"), shiftright($"simhash", c * 16).bitwiseAND(lit(0xffffL)).as("ch")))
-    val buckets = capHotBuckets(
-      sig.select($"doc_id", $"simhash", explode(array(chunkCols: _*)).as("cb"))
-        .select($"doc_id", $"simhash", $"cb.c", $"cb.ch"),
-      Seq("c", "ch"), maxDf)
-    // codegen'd hamming distance: bit_count(a XOR b) stays inside
-    // whole-stage codegen, unlike a Scala UDF
-    def ham(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      call_function("bit_count", a.bitwiseXOR(b))
-    // NOT the cosineNearDup emit-once rule (considered in r6): with the
-    // df cap a pair's first AGREEING chunk may sit in a DROPPED bucket,
-    // so "keep only at first agreement" would lose pairs the capped
-    // candidate set still contains — the distinct stays.
-    buckets.as("a").join(buckets.as("b"),
-        col("a.c") === col("b.c") && col("a.ch") === col("b.ch") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        ham(col("a.simhash"), col("b.simhash")).as("hamming"))
-      .distinct()
-      .filter($"hamming" <= maxHamming)
-  }
+                             maxDf: Int = Banding.MaxBucketDf): DataFrame =
+    Banding.hammingNearDup(sig, "doc_id", "simhash",
+      (0 until 4).map(c => c -> shiftright(col("simhash"), c * 16).bitwiseAND(lit(0xffffL))),
+      maxHamming, maxDf)
 
   // ------------------------------------------------------- semantic dedup
 
@@ -700,7 +632,7 @@ object Dedup {
         |  WHERE doc_id % 7 = 0),
         |fp0 AS (SELECT doc_id, source, md5(lower(trim(text))) AS fp FROM corpus),
         |ok AS (SELECT fp FROM fp0 GROUP BY 1 HAVING count(*) <= """.stripMargin +
-      MaxFpDf.toString + """),
+      Banding.MaxBucketDf.toString + """),
         |fp AS (SELECT fp0.* FROM fp0 JOIN ok USING (fp))
         |SELECT a.source AS src_a, b.source AS src_b, count(*) AS n_pairs,
         |  CAST(count(DISTINCT a.fp) AS BIGINT) AS n_shared_fps
@@ -715,7 +647,7 @@ object Dedup {
         |  FROM (SELECT doc_id, source, w, unnest(generate_series(1, len(w) - 2)) AS i
         |        FROM toks WHERE len(w) >= 3)),
         |ok AS (SELECT shingle FROM sh GROUP BY 1 HAVING count(*) <= """.stripMargin +
-      MaxShingleDf.toString + """),
+      Banding.MaxBucketDf.toString + """),
         |shj AS (SELECT sh.* FROM sh JOIN ok USING (shingle))
         |SELECT a.source AS src_a, b.source AS src_b,
         |  a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS n_shared
@@ -725,7 +657,7 @@ object Dedup {
     // a node = min doc_id that reaches it over the (undirected) pair
     // graph — the same fixpoint min-label propagation converges to,
     // independent of round count. Edge set = the q_ngram_jaccard pair
-    // CTE (same MaxShingleDf cap).
+    // CTE (same Banding.MaxBucketDf cap).
     "q_dedup_clusters" ->
       ("""WITH RECURSIVE toks AS (
         |  SELECT doc_id, source, regexp_split_to_array(trim(text), '\s+') AS w FROM documents),
@@ -735,7 +667,7 @@ object Dedup {
         |  FROM (SELECT doc_id, source, w, unnest(generate_series(1, len(w) - 2)) AS i
         |        FROM toks WHERE len(w) >= 3)),
         |df_ok AS (SELECT source, shingle FROM sh GROUP BY 1, 2 HAVING count(*) <= """.stripMargin +
-      MaxShingleDf.toString + """),
+      Banding.MaxBucketDf.toString + """),
         |shj AS (SELECT sh.* FROM sh JOIN df_ok USING (source, shingle)),
         |inter AS (
         |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
@@ -760,7 +692,7 @@ object Dedup {
         |  FROM (SELECT doc_id, source, w, unnest(generate_series(1, len(w) - 2)) AS i
         |        FROM toks WHERE len(w) >= 3)),
         |df_ok AS (SELECT source, shingle FROM sh GROUP BY 1, 2 HAVING count(*) <= """.stripMargin +
-      MaxShingleDf.toString + """),
+      Banding.MaxBucketDf.toString + """),
         |shj AS (SELECT sh.* FROM sh JOIN df_ok USING (source, shingle)),
         |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
         |inter AS (
@@ -783,7 +715,7 @@ object Dedup {
         |  SELECT doc_id, simhash, c, (simhash >> (16 * c)) & 65535 AS ch
         |  FROM sig, (SELECT unnest(generate_series(0, 3)) AS c)),
         |ok AS (SELECT c, ch FROM b GROUP BY 1, 2 HAVING count(*) <= """.stripMargin +
-      MaxChunkDf.toString + """),
+      Banding.MaxBucketDf.toString + """),
         |bj AS (SELECT b.* FROM b JOIN ok USING (c, ch))
         |SELECT DISTINCT a.doc_id AS a_id, b2.doc_id AS b_id,
         |  CAST(bit_count(xor(a.simhash, b2.simhash)) AS INT) AS hamming
@@ -793,7 +725,7 @@ object Dedup {
     "q_minhash_neardup" ->
       ("""WITH keys AS (SELECT * FROM read_parquet('{AUX}/minhash_bands/*.parquet')),
         |ok AS (SELECT band, bh FROM keys GROUP BY 1, 2 HAVING count(*) <= """.stripMargin +
-      MaxBandDf.toString + """),
+      Banding.MaxBucketDf.toString + """),
         |kj AS (SELECT keys.* FROM keys JOIN ok USING (band, bh)),
         |cands AS (
         |  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id

@@ -89,15 +89,6 @@ object Multimodal {
     Array.tabulate(64)(i => if (counts(i) == 0) 0f else (sums(i) / counts(i)).toFloat)
   }
 
-  /** Hot-bucket guard for the chunk-pair banding: a band bucket holding
-    * f images contributes f² candidate pairs, so one degenerate common
-    * key (flat-color thumbnails all hashing alike) is quadratic at the
-    * 10^9-image design point. Buckets with df > MaxPhashBandDf are
-    * dropped from the JOIN ONLY — the SAME cap is interpolated into the
-    * aux oracle SQL (the Dedup.MaxShingleDf pattern), so engine and
-    * oracle agree bit-for-bit even when the cap binds. */
-  val MaxPhashBandDf = 1000
-
   /** Near-duplicate images by perceptual-hash chunk-PAIR banding (same
     * shape as Dedup.simhashNearDup, over the images table's phash
     * column). The 64-bit hash splits into 8 chunks of 8 bits; the band
@@ -107,33 +98,16 @@ object Multimodal {
     * banding stays COMPLETE for maxHamming <= 6 while each key space is
     * 65,536 values instead of the single-chunk scheme's 256 (which made
     * every bucket hold ~n/2048 rows at design scale — an effectively
-    * quadratic self-join; OpsSpec asserts equality vs brute force). */
+    * quadratic self-join; OpsSpec asserts equality vs brute force).
+    * Buckets with df > maxDf are dropped from the join. */
   def phashNearDup(images: DataFrame, maxHamming: Int = 6,
-                   maxDf: Int = MaxPhashBandDf): DataFrame = {
-    val spark = images.sparkSession
-    import spark.implicits._
+                   maxDf: Int = Banding.MaxBucketDf): DataFrame = {
     require(maxHamming <= 6,
       s"8-chunk PAIR banding is only complete for hamming <= 6, got $maxHamming")
-    val pairCols = for { c1 <- 0 until 8; c2 <- c1 + 1 until 8 } yield
-      struct(lit(c1 * 8 + c2).as("c"),
-        shiftright($"phash", c1 * 8).bitwiseAND(lit(0xffL))
-          .bitwiseOR(shiftleft(shiftright($"phash", c2 * 8).bitwiseAND(lit(0xffL)), 8))
-          .as("ch"))
-    val buckets = Dedup.capHotBuckets(
-      images.select($"image_id", $"phash", explode(array(pairCols: _*)).as("cb"))
-        .select($"image_id", $"phash", $"cb.c", $"cb.ch"),
-      Seq("c", "ch"), maxDf)
-    // codegen'd hamming distance: bit_count(a XOR b) stays inside
-    // whole-stage codegen, unlike a Scala UDF
-    def ham(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      call_function("bit_count", a.bitwiseXOR(b))
-    buckets.as("a").join(buckets.as("b"),
-        col("a.c") === col("b.c") && col("a.ch") === col("b.ch") &&
-          col("a.image_id") < col("b.image_id"))
-      .select(col("a.image_id").as("a_id"), col("b.image_id").as("b_id"),
-        ham(col("a.phash"), col("b.phash")).as("hamming"))
-      .distinct()
-      .filter($"hamming" <= maxHamming)
+    def chunk(c: Int) = shiftright(col("phash"), c * 8).bitwiseAND(lit(0xffL))
+    val pairKeys = for { c1 <- 0 until 8; c2 <- c1 + 1 until 8 } yield
+      (c1 * 8 + c2) -> chunk(c1).bitwiseOR(shiftleft(chunk(c2), 8))
+    Banding.hammingNearDup(images, "image_id", "phash", pairKeys, maxHamming, maxDf)
   }
 
   /** Near-duplicate image CLUSTERS: connected components over the
@@ -191,7 +165,7 @@ object Multimodal {
         |    ((phash >> (8 * c1)) & 255) | (((phash >> (8 * c2)) & 255) << 8) AS ch
         |  FROM sig, pairs),
         |ok AS (SELECT c, ch FROM b GROUP BY 1, 2 HAVING count(*) <= """.stripMargin +
-      MaxPhashBandDf.toString + """),
+      Banding.MaxBucketDf.toString + """),
         |bj AS (SELECT b.* FROM b JOIN ok USING (c, ch))
         |SELECT DISTINCT a.image_id AS a_id, b2.image_id AS b_id,
         |  CAST(bit_count(xor(a.phash, b2.phash)) AS INT) AS hamming
@@ -213,7 +187,7 @@ object Multimodal {
         |    ((phash >> (8 * c1)) & 255) | (((phash >> (8 * c2)) & 255) << 8) AS ch
         |  FROM sig, cp),
         |ok AS (SELECT c, ch FROM b GROUP BY 1, 2 HAVING count(*) <= """.stripMargin +
-      MaxPhashBandDf.toString + """),
+      Banding.MaxBucketDf.toString + """),
         |bj AS (SELECT b.* FROM b JOIN ok USING (c, ch)),
         |nd AS (
         |  SELECT DISTINCT a.image_id AS a_id, b2.image_id AS b_id

@@ -175,28 +175,18 @@ object Similarity {
     }
   }
 
-  /** (vec_id, band, bk) SRP band keys for the near-dup family —
-    * mapPartitions kernel over primitive arrays (96 plane dots per row
-    * stay unboxed). Shared by [[cosineNearDup]] and the aux oracle dump
-    * so the DuckDB side replays exactly these keys. */
-  def nearDupBands(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    embTyped(spark, dir)
-      .mapPartitions { it =>
-        it.flatMap { case (id, v) =>
-          val ks = nearDupBandKeys(v)
-          Iterator.tabulate(ks.length)(b => (id, b, ks(b)))
-        }
-      }
-      .toDF("vec_id", "band", "bk")
-  }
+  /** Aux dump for the DuckDB oracle: the (vec_id, band, bk) SRP band
+    * keys [[cosineNearDup]] joins on (the packed key vector is an
+    * internal dedup carrier, never dumped). */
+  def nearDupBands(spark: SparkSession, dir: String): DataFrame =
+    nearDupBandsPacked(spark, dir).select("vec_id", "band", "bk")
 
-  /** Band rows carrying the vector's FULL packed key vector: 32 3-bit
-    * band keys in two longs (groups 0-15 at bits 3i of k0, 16-31 at
-    * bits 3(i-16) of k1) — what lets the pair join dedup WITHOUT a
-    * shuffle (see [[cosineNearDup]]). Same key family as
-    * [[nearDupBands]] (shared [[nearDupBandKeys]] kernel), so the aux
-    * oracle dump replays exactly this banding. */
+  /** (vec_id, band, bk, k0, k1) SRP band rows for the near-dup family —
+    * mapPartitions kernel over primitive arrays (96 plane dots per row
+    * stay unboxed). Each row carries the vector's FULL packed key
+    * vector: 32 3-bit band keys in two longs (groups 0-15 at bits 3i of
+    * k0, 16-31 at bits 3(i-16) of k1) — what lets the pair join dedup
+    * WITHOUT a shuffle (see [[cosineNearDup]]). */
   private def nearDupBandsPacked(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     embTyped(spark, dir)
@@ -214,18 +204,6 @@ object Similarity {
         }
       }
       .toDF("vec_id", "band", "bk", "k0", "k1")
-  }
-
-  /** Index of the FIRST band whose 3-bit key agrees, given the XORs of
-    * the two packed key vectors (a 32-arm codegen'd CASE — group i
-    * agrees iff its 3 xor bits are zero). Total because the inputs
-    * always come from a band join: at least the joined band agrees. */
-  private def firstAgreeBand(x0: Column, x1: Column): Column = {
-    def grp(x: Column, off: Int) = shiftright(x, off).bitwiseAND(lit(7L))
-    (0 until NearDupBands).foldRight(lit(NearDupBands): Column) { (i, rest) =>
-      val g = if (i < 16) grp(x0, 3 * i) else grp(x1, 3 * (i - 16))
-      when(g === 0L, lit(i)).otherwise(rest)
-    }
   }
 
   /** Near-duplicate pairs over a cosine threshold (percent, to keep the
@@ -248,13 +226,14 @@ object Similarity {
     * candidate PAIR stream, which is the super-linear term. */
   def cosineNearDup(spark: SparkSession, dir: String, minCosPct: Int = 40): DataFrame = {
     import spark.implicits._
-    val bands = nearDupBandsPacked(spark, dir)
-    val cands = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bk") === col("b.bk") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .filter(firstAgreeBand(col("a.k0").bitwiseXOR(col("b.k0")),
-        col("a.k1").bitwiseXOR(col("b.k1"))) === col("a.band"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
+    // band i agrees iff its 3 bits of the packed-key XOR are zero
+    val (x0, x1) = (col("a.k0").bitwiseXOR(col("b.k0")), col("a.k1").bitwiseXOR(col("b.k1")))
+    val firstAgree = Banding.firstAgreeing(NearDupBands) { i =>
+      val g = if (i < 16) shiftright(x0, 3 * i) else shiftright(x1, 3 * (i - 16))
+      g.bitwiseAND(lit(7L)) === 0L
+    }
+    val cands = Banding.selfJoin(nearDupBandsPacked(spark, dir), "vec_id", Seq("band", "bk"),
+      Banding.FirstAgreeingBand(firstAgree))
     val ev = emb(spark, dir).select($"vec_id", $"embedding", norm($"embedding").as("nrm"))
     cands
       .join(ev.select($"vec_id".as("a_id"), $"embedding".as("ea"), $"nrm".as("na")), "a_id")
@@ -332,16 +311,15 @@ object Similarity {
   def lshTopK(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     import spark.implicits._
     val buckets = lshBuckets(spark, dir)
-    // emit-once dedup (r6, the cosineNearDup rule — sound here because
-    // the LSH bands are UNcapped): a pair agreeing on both bands used to
-    // surface twice and be collapsed by a groupBy/first — an exchange of
-    // the scored candidate stream. Band agreement is recomputable from
-    // the two signatures, so "keep the pair only in its first agreeing
+    // emit-once dedup (the cosineNearDup rule — sound here because the
+    // LSH bands are UNcapped): band agreement is recomputable from the
+    // two signatures, so "keep the pair only in its first agreeing
     // band" is a codegen'd filter: one survivor per pair, no exchange.
+    // Not Banding.selfJoin: top-k per query needs both directions
+    // (a =!= b), not a < b.
     val x = col("a.sig").bitwiseXOR(col("b.sig"))
-    val firstAgree = (0 until SrpBands).foldRight(lit(SrpBands): Column) { (b, rest) =>
-      when(shiftright(x, b * BitsPerBand)
-        .bitwiseAND(lit((1 << BitsPerBand) - 1)) === 0, lit(b)).otherwise(rest)
+    val firstAgree = Banding.firstAgreeing(SrpBands) { b =>
+      shiftright(x, b * BitsPerBand).bitwiseAND(lit((1 << BitsPerBand) - 1)) === 0
     }
     val cands = buckets.as("a").join(buckets.as("b"),
         col("a.band") === col("b.band") && col("a.bk") === col("b.bk") &&

@@ -1080,4 +1080,47 @@ class OpsSpec extends SparkTestBase {
     assert(expected.nonEmpty && (pureBrute -- expected).nonEmpty,
       s"cap did not bind: brute=${pureBrute.size} capped=${expected.size}")
   }
+
+  test("every banded near-dup family emits a pair once, however many bands it agrees in") {
+    val spark0 = spark
+    import spark0.implicits._
+    import org.apache.spark.sql.DataFrame
+    // unordered id pairs that share >= 2 of the (id, band, key) rows
+    def multiBand(keys: DataFrame): Set[Set[String]] =
+      keys.collect().map(r => (r.get(0).toString, (r.get(1), r.get(2))))
+        .groupBy(_._2).values.toSeq
+        .flatMap(_.map(_._1).toSeq.combinations(2).map(_.toSet))
+        .groupBy(identity).collect { case (p, hits) if hits.size >= 2 => p }.toSet
+    def emitsOnce(name: String, out: DataFrame, keys: DataFrame): Array[Seq[String]] = {
+      val rows = out.collect().map(_.toSeq.map(_.toString))
+      val pairs = rows.map(r => (r(0), r(1)))
+      val multi = multiBand(keys)
+      assert(pairs.exists { case (a, b) => multi.contains(Set(a, b)) },
+        s"$name: no emitted pair agrees in two bands, so duplicates could not show")
+      assert(pairs.length == pairs.distinct.length,
+        s"$name emitted a pair twice: ${pairs.diff(pairs.distinct).take(5).toSeq}")
+      rows
+    }
+    // planted signatures: (2k, 2k+1) differ in one bit of byte k, so
+    // they share 3 of 4 simhash chunks and 21 of 28 phash pair keys
+    val sigs = (0 until 8).flatMap { k =>
+      val h = graft.core.XxHash64.mix(k.toLong, 99L)
+      Seq((2L * k, h), (2L * k + 1, h ^ (1L << (8 * k))))
+    }
+    emitsOnce("simhash", Dedup.simhashNearDupFromSigs(sigs.toDF("doc_id", "simhash")),
+      sigs.flatMap { case (id, h) =>
+        (0 until 4).map(c => (id, c, (h >>> (c * 16)) & 0xffffL)) }.toDF())
+    val imgSigs = sigs.map { case (id, h) => (f"img$id%02d", h) }
+    emitsOnce("phash", Multimodal.phashNearDup(imgSigs.toDF("image_id", "phash")),
+      imgSigs.flatMap { case (id, h) => phashPairKeys(h).map { case (c, k) => (id, c, k) } }.toDF())
+    emitsOnce("minhash", Dedup.minhashNearDup(spark, docsDir), Dedup.minhashBands(spark, docsDir))
+    emitsOnce("cosine", Similarity.cosineNearDup(spark, embDir, minCosPct = 90),
+      Similarity.nearDupBands(spark, embDir))
+    // lshTopK joins both directions (a =!= b): each ordered pair once,
+    // and each query's ranks once
+    val lsh = emitsOnce("lsh", Similarity.lshTopK(spark, embDir), Similarity.lshBandsAux(spark, embDir))
+    val ranks = lsh.map(r => (r(0), r(2)))
+    assert(ranks.length == ranks.distinct.length,
+      s"lsh repeated a rank: ${ranks.diff(ranks.distinct).take(5).toSeq}")
+  }
 }

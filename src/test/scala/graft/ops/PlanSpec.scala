@@ -59,6 +59,31 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
+  test("near-dup joins stay equi-join shaped and only the capped ones aggregate their pairs") {
+    val capped = Seq("minhash", "simhash", "phash")
+    val emitOnce = Seq("cosine", "lsh")
+    val plans = Map(
+      "ngram" -> Dedup.ngramJaccard(spark, dir),
+      "minhash" -> Dedup.minhashNearDup(spark, dir),
+      "simhash" -> Dedup.simhashNearDup(spark, dir),
+      "phash" -> Multimodal.phashNearDup(Multimodal.syntheticImages(spark, 16)),
+      "cosine" -> Similarity.cosineNearDup(spark, dir),
+      "lsh" -> Similarity.lshTopK(spark, dir)).map { case (n, df) => n -> plan(df) }
+    for ((name, p) <- plans)
+      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+        s"$name fell back to an all-pairs join:\n" + p)
+    // Banding.CapThenDistinct: the pair stream is deduped by an
+    // aggregate keyed on (a_id, b_id, …)
+    for (name <- capped)
+      assert("Keys \\[\\d+\\]: \\[a_id".r.findFirstIn(plans(name)).isDefined,
+        s"$name lost its pair distinct:\n" + plans(name))
+    // Banding.FirstAgreeingBand: one survivor per pair from a filter,
+    // so no aggregate (and no exchange of the pair stream) anywhere
+    for (name <- emitOnce)
+      assert(!plans(name).contains("HashAggregate"),
+        s"$name aggregates its pairs again:\n" + plans(name))
+  }
+
   test("similarity scoring uses the codegen float_dot, not interpreted higher-order folds") {
     val p = plan(Similarity.ivfTopK(spark, dir))
     assert(p.contains("float_dot"), "FloatDot expression missing from the plan:\n" + p)
